@@ -370,19 +370,22 @@ def main() -> None:
             # stamp the failure visibly and keep sweeping. A HEADLINE
             # failure still aborts: a partial headline total would be
             # quoted as if comparable, which is worse than no artifact.
-            if name in TREND:
-                trend_timings[name] = None
-                print(f"# {name}: FAILED ({type(e).__name__}: {e})",
-                      file=sys.stderr)
-                continue
-            raise
-        tgt = trend_timings if name in TREND else timings
-        tgt[name] = round(best, 3)
-        print(f"# {name}: {tgt[name]:.2f}s ({n} rows)", file=sys.stderr)
-        all_names = HEADLINE + TREND
-        _segment_probe(
-            name, all_names.index(name), name == all_names[-1]
-        )
+            if name not in TREND:
+                raise
+            trend_timings[name] = None
+            print(f"# {name}: FAILED ({type(e).__name__}: {e})",
+                  file=sys.stderr)
+        else:
+            tgt = trend_timings if name in TREND else timings
+            tgt[name] = round(best, 3)
+            print(f"# {name}: {tgt[name]:.2f}s ({n} rows)", file=sys.stderr)
+        finally:
+            # a failed TREND slot keeps its calibration sample, and the
+            # final 32t checkpoint is recorded even if the last query fails
+            all_names = HEADLINE + TREND
+            _segment_probe(
+                name, all_names.index(name), name == all_names[-1]
+            )
 
     load_end = os.getloadavg()
     # post-sweep anchor re-read: the PRE-sweep sample normalizes the

@@ -27,8 +27,11 @@ per-round discipline) can keep doing so.
 
 from __future__ import annotations
 
+import hashlib
+import os
 import threading
 from contextlib import contextmanager
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 
@@ -328,16 +331,25 @@ def clear_memo() -> int:
     return n
 
 
+# --------------------------------------------------------------------------
+# Scalar statistics memo: the measured sizes behind the planner's size
+# dispatches (q07's dimension rows, q36's join fan-out and packed-array
+# bytes, q105's LM-table stats), plus the deep input fingerprints their
+# keys carry. Every statistic is keyed by :func:`stat_key`, so a session
+# pays each probe once per input and plan, and an in-session rewrite of
+# the input mints a new key. Staleness can change a join strategy, never
+# results. Values are plain scalars: nothing here holds executor storage.
+# --------------------------------------------------------------------------
+
+STATS_MEMO: dict[tuple, object] = {}
+
+
 def bounded_memo_get(memo: dict, key, compute, max_entries: int = 32):
-    """THE single FIFO-evict bounded scalar memo behind the planner
-    probes (`_FANOUT_MEMO`, `_DIM_PROBE_MEMO`, `_FPRINT_MEMO`): return
-    ``memo[key]``, computing and inserting it on a miss, evicting
-    insertion-order heads to stay under ``max_entries``. Values must be
-    plain scalars/strings — nothing here unpersists (frame-holding
-    memos belong to the session memo above). Three hand-rolled copies
-    of this loop needed three separate evict-bug fixes across rounds;
-    key construction stays at each call site, so consolidating cannot
-    change any memo's key semantics."""
+    """Return ``memo[key]``, computing and inserting it on a miss and
+    evicting insertion-order heads to stay under ``max_entries`` — the
+    FIFO-bounded lookup behind :data:`STATS_MEMO`. Values must be plain
+    scalars/strings: nothing here unpersists (frame-holding memos belong
+    to the session memo above)."""
     if key in memo:
         return memo[key]
     val = compute()
@@ -345,6 +357,115 @@ def bounded_memo_get(memo: dict, key, compute, max_entries: int = 32):
         memo.pop(next(iter(memo)))
     memo[key] = val
     return val
+
+
+def _hadoop_listing(spark, path: str) -> list[str]:
+    """``path:length:modificationTime`` for every file under ``path``,
+    recursively, via the session's Hadoop FileSystem — the same
+    rewrite-detection signal the local os.stat branch folds. Raises on
+    schemes with no FS implementation (callers degrade to ``nostat``);
+    testable against ``file:///`` directly."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    it = fs.listFiles(jpath, True)
+    entries = []
+    while it.hasNext():
+        st = it.next()
+        entries.append(f"{st.getPath()}:{st.getLen()}:{st.getModificationTime()}")
+    return entries
+
+
+def _input_fingerprint(path: str, spark=None) -> str:
+    """Deep snapshot of an input path — sorted (path, size, mtime) of
+    every data file, md5-folded. A consumer that REWRITES the dataset at
+    the same path mid-session gets a fresh key instead of a stale entry.
+    Only a ``://`` URI is treated as non-local (a bare local path with
+    ``:`` inside a segment still stats locally); ``file://`` strips to
+    the local branch; other schemes (s3a/hdfs/...) never hit os.stat —
+    with a ``spark`` handle they fold (path, length, modificationTime)
+    from the Hadoop FileSystem listing, which still detects a rewrite
+    that keeps part-file names (distcp -overwrite) — else fall back to
+    ``"nostat"`` (path-only key)."""
+    h = hashlib.md5()
+    if "://" in path:
+        scheme, _, rest = path.partition("://")
+        if scheme == "file":
+            path = urlsplit(f"{scheme}://{rest}").path
+        else:
+            if spark is None:
+                return "nostat"
+            try:
+                entries = _hadoop_listing(spark, path)
+            except Exception:  # no FS impl / unreadable: degrade, don't fail the memo
+                return "nostat"
+            for e in sorted(entries):
+                h.update(e.encode() + b";")
+            return h.hexdigest()
+    try:
+        if os.path.isdir(path):
+            for root, dirs, files in os.walk(path):
+                dirs.sort()
+                for f in sorted(files):
+                    fp = os.path.join(root, f)
+                    st = os.stat(fp)
+                    h.update(
+                        f"{os.path.relpath(fp, path)}:{st.st_size}:"
+                        f"{st.st_mtime_ns};".encode()
+                    )
+        elif os.path.isfile(path):
+            st = os.stat(path)
+            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+        else:
+            return "nostat"
+    except OSError:
+        return "nostat"
+    return h.hexdigest()
+
+
+def _fingerprint_guarded(sf_dir: str, spark) -> str:
+    """:func:`_input_fingerprint` of ``sf_dir``, memoized behind a
+    shallow signature so a memo HIT does not walk every data file. The
+    signature stats every DIRECTORY under sf_dir plus sf_dir's top-level
+    files: creating, deleting, renaming or replacing an entry at any
+    depth bumps its parent directory's mtime (this covers a partition
+    overwrite inside table/date=x/), and the top-level file stats cover
+    single-file tables. Cost is O(#dirs), not O(#files). Not seen: an
+    in-place truncate-rewrite of a nested file, which no table writer
+    does (they all write new files, then rename). Non-local URIs pay the
+    listing-based deep fingerprint per call."""
+    if "://" in sf_dir and not sf_dir.startswith("file://"):
+        return _input_fingerprint(sf_dir, spark)
+    local = sf_dir[len("file://"):] if sf_dir.startswith("file://") else sf_dir
+    try:
+        st = os.stat(local)
+        sig = [(".", st.st_mtime_ns, st.st_size)]
+        for root, dirs, files in os.walk(local):
+            for name in dirs + (files if root == local else []):
+                p = os.path.join(root, name)
+                st = os.stat(p)
+                sig.append((os.path.relpath(p, local), st.st_mtime_ns, st.st_size))
+    except OSError:
+        return _input_fingerprint(sf_dir, spark)
+    return bounded_memo_get(
+        STATS_MEMO,
+        ("input_fingerprint", sf_dir, tuple(sorted(sig))),
+        lambda: _input_fingerprint(sf_dir, spark),
+    )
+
+
+def stat_key(name: str, df: DataFrame, sf_dir: str) -> tuple:
+    """THE key of a :data:`STATS_MEMO` statistic: its name, the session
+    (applicationId — a stopped session's object id can be reused), the
+    guarded fingerprint of the input under ``sf_dir``, and the semantic
+    hash of the analyzed plan it measures (which names the scanned
+    paths, so two differently-filtered frames never share a value)."""
+    spark = df.sparkSession
+    return (
+        name,
+        spark.sparkContext.applicationId,
+        _fingerprint_guarded(sf_dir, spark),
+        df._jdf.queryExecution().analyzed().semanticHash(),
+    )
 
 
 def release_caches() -> int:

@@ -32,11 +32,14 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 from mapreduce_framework_simple_spark.ephemeral import (
+    STATS_MEMO,
+    _input_fingerprint,
     bounded_memo_get,
     release_local_checkpoint,
     scoped_broadcast,
     scoped_cache,
     scoped_release,
+    stat_key,
 )
 from mapreduce_framework_simple_spark.operators.text import (
     DUCK_SHINGLES,
@@ -203,15 +206,26 @@ def ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fan-out (see :func:`_jaccard_join_fanout`); this entry point
     forces the prefix plan (equality-tested in test_similarity_dedup)."""
     sh = scoped_cache(shingle_id_sets(spark, sf_dir))
-    return _jaccard_prefix_pairs(sh).select(
+    return _jaccard_prefix_pairs(sh, sf_dir).select(
         "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
     )
 
 
-def _jaccard_prefix_pairs(sh: DataFrame) -> DataFrame:
-    """The prefix-filter kernel body over a CACHED (doc_id, sid) frame —
-    returns (doc_a, doc_b, jaccard_raw UNROUNDED), identical rows to
-    :func:`_jaccard_truth_pairs` (see :func:`ngram_jaccard_prefix` for
+def _packed_bytes(sh: DataFrame) -> int:
+    """Upper estimate of the packed shingle arrays' bytes: 8 B per
+    (doc_id, sid) row (each lands in exactly one array) plus ~64 B of
+    array/row overhead per doc, exact counts from ONE aggregate."""
+    st = sh.agg(
+        F.count("*").alias("rows"), F.count_distinct("doc_id").alias("docs")
+    ).collect()[0]
+    return int(st["rows"]) * 8 + int(st["docs"]) * 64
+
+
+def _jaccard_prefix_pairs(sh: DataFrame, sf_dir: str) -> DataFrame:
+    """The prefix-filter kernel body over a CACHED (doc_id, sid) frame
+    read from ``sf_dir`` (the input its memoized packed-bytes statistic
+    is keyed on) — returns (doc_a, doc_b, jaccard_raw UNROUNDED),
+    identical rows to :func:`_jaccard_truth_pairs` (see :func:`ngram_jaccard_prefix` for
     the algorithm and measured regimes). A frame already carrying the
     per-doc shingle count as ``n`` (q36 bakes it into the shared cache —
     see :func:`_with_doc_n`) skips this kernel's own count window."""
@@ -287,21 +301,20 @@ def _jaccard_prefix_pairs(sh: DataFrame) -> DataFrame:
     # rule itself routes through _jaccard_filter — THE single definition
     # shared with the naive kernel, the q112 truth side, and the referee,
     # so a rule change can never make q36 dispatch-dependent.
-    # SIZE-DISPATCHED broadcast (round 13): at the 20× dup-heavy probe
-    # the planner's estimate pushed packed past the auto threshold and
-    # BOTH verify joins became shuffles of the full candidate stream —
+    # SIZE-DISPATCHED broadcast: at the 20× dup-heavy probe the
+    # planner's estimate pushed packed past the auto threshold and BOTH
+    # verify joins became shuffles of the full candidate stream —
     # measured 168.8 s vs 36.2 s with packed broadcast (4.7×). packed
-    # bytes are provably ≈ rows×8 (each cached (doc_id, sid) row lands
-    # in exactly one array) + docs×overhead, both exact from ONE small
-    # aggregate over the already-cached sh, so the broadcast is forced
-    # only when that bound fits comfortably (guide §3.1: a few hundred
-    # MB is fine); a corpus-scale doc count falls back to the planner's
-    # shuffle join — the safe direction.
+    # bytes are provably ≈ rows×8 + docs×overhead (:func:`_packed_bytes`,
+    # memoized like q36's fan-out), so the broadcast is forced only when
+    # that bound fits comfortably (guide §3.1: a few hundred MB is fine);
+    # a corpus-scale doc count falls back to the planner's shuffle join
+    # — the safe direction.
     packed = sh.groupBy("doc_id").agg(F.array_sort(F.collect_list("sid")).alias("sids"))
-    st = sh.agg(
-        F.count("*").alias("rows"), F.count_distinct("doc_id").alias("docs")
-    ).collect()[0]
-    if int(st["rows"]) * 8 + int(st["docs"]) * 64 <= PACKED_BROADCAST_BYTES_BOUND:
+    packed_bytes = bounded_memo_get(
+        STATS_MEMO, stat_key("packed_bytes", sh, sf_dir), lambda: _packed_bytes(sh)
+    )
+    if packed_bytes <= PACKED_BROADCAST_BYTES_BOUND:
         packed = F.broadcast(packed)
     inter = (
         cand.join(
@@ -353,7 +366,7 @@ JACCARD_FANOUT_DISPATCH = 35.0
 # sf0.1 (warm): ~0.65–0.8 s, ≈30–40 % of the naive kernel — fixed
 # per-job overhead dominates at bench scale (the unsampled aggregate
 # times the same there; the sample pays off where shuffle volume
-# dominates) — paid once per (session, input) via _FANOUT_MEMO, and
+# dominates) — paid once per (session, input) via STATS_MEMO, and
 # ~1.5–2 % of the 43–66 s kernels in the dup-heavy regime the dispatch
 # exists for (docs/SCALE.md). Sampling by ROW —
 # not by sid — is what makes the probe skew-robust: a single ultra-hot
@@ -368,16 +381,7 @@ JACCARD_FANOUT_DISPATCH = 35.0
 # right call at that size.
 _FANOUT_SAMPLE_MOD = 8
 
-# (applicationId, sf_dir, input fingerprint) -> measured fan-out. The
-# statistic is a pure function of immutable parquet (same premise,
-# same key fields as the capped-band session memo), so composing queries
-# and repeat bench runs skip the probe entirely. Scalars only — nothing
-# to unpersist — bounded by FIFO eviction.
-_FANOUT_MEMO: dict[tuple, float] = {}
-_FANOUT_MEMO_MAX = 32
-
-
-def _jaccard_join_fanout(sh: DataFrame, memo_key: tuple | None = None) -> float:
+def _jaccard_join_fanout(sh: DataFrame) -> float:
     """Predicted output rows PER INPUT ROW of the naive sid self-join
     (Σ_s C(df_s, 2) / Σ_s df_s) — the skew statistic q36's kernel
     dispatch keys on. One map-side-combined aggregate over a 1/8
@@ -385,35 +389,28 @@ def _jaccard_join_fanout(sh: DataFrame, memo_key: tuple | None = None) -> float:
     ``_FANOUT_SAMPLE_MOD`` comment for the debiasing math and why row
     sampling — unlike sid sampling — cannot miss a hot shingle); the
     eager collect is a single scalar row, the same one-small-action
-    pattern as the LSH fan-out guard. Pass ``memo_key`` (session +
-    input fingerprint) to memoize the scalar across composing queries
-    and repeat runs."""
-    def compute() -> float:
-        p = 1.0 / _FANOUT_SAMPLE_MOD
-        row = (
-            sh.where(
-                F.pmod(F.xxhash64("sid", "doc_id"), F.lit(_FANOUT_SAMPLE_MOD)) == 0
-            )
-            .groupBy("sid")
-            .agg(F.count("*").alias("c"))
-            .agg(
-                F.sum(
-                    (F.col("c") * F.col("c") - (1.0 - p) * F.col("c")) / (p * p)
-                ).alias("sum_df2"),
-                (F.sum("c") / p).alias("sum_df"),
-            )
-            .select(
-                (
-                    (F.col("sum_df2") - F.col("sum_df")) / (2.0 * F.col("sum_df"))
-                ).alias("fanout")
-            )
-            .collect()[0]
+    pattern as the LSH fan-out guard."""
+    p = 1.0 / _FANOUT_SAMPLE_MOD
+    row = (
+        sh.where(
+            F.pmod(F.xxhash64("sid", "doc_id"), F.lit(_FANOUT_SAMPLE_MOD)) == 0
         )
-        return max(0.0, float(row["fanout"] or 0.0))
-
-    if memo_key is None:
-        return compute()
-    return bounded_memo_get(_FANOUT_MEMO, memo_key, compute, _FANOUT_MEMO_MAX)
+        .groupBy("sid")
+        .agg(F.count("*").alias("c"))
+        .agg(
+            F.sum(
+                (F.col("c") * F.col("c") - (1.0 - p) * F.col("c")) / (p * p)
+            ).alias("sum_df2"),
+            (F.sum("c") / p).alias("sum_df"),
+        )
+        .select(
+            (
+                (F.col("sum_df2") - F.col("sum_df")) / (2.0 * F.col("sum_df"))
+            ).alias("fanout")
+        )
+        .collect()[0]
+    )
+    return max(0.0, float(row["fanout"] or 0.0))
 
 
 @query(
@@ -459,13 +456,11 @@ def q36_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-side broadcast-join attach (which LOST 2.06 → 3.47 —
     see _jaccard_truth_pairs)."""
     sh = scoped_cache(_with_doc_n(shingle_id_sets(spark, sf_dir)))
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _input_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark),
+    fanout = bounded_memo_get(
+        STATS_MEMO, stat_key("fanout", sh, sf_dir), lambda: _jaccard_join_fanout(sh)
     )
-    if _jaccard_join_fanout(sh, memo_key) > JACCARD_FANOUT_DISPATCH:
-        pairs = _jaccard_prefix_pairs(sh)
+    if fanout > JACCARD_FANOUT_DISPATCH:
+        pairs = _jaccard_prefix_pairs(sh, sf_dir)
     else:
         pairs = _jaccard_truth_pairs(sh)
     return pairs.select(
@@ -745,76 +740,6 @@ def lsh_candidate_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
-
-def _hadoop_listing(spark: SparkSession, path: str) -> list[str]:
-    """``path:length:modificationTime`` for every file under ``path``,
-    recursively, via the session's Hadoop FileSystem — the same
-    rewrite-detection signal the local os.stat branch folds. Raises on
-    schemes with no FS implementation (callers degrade to ``nostat``);
-    testable against ``file:///`` directly."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
-    entries = []
-    while it.hasNext():
-        st = it.next()
-        entries.append(f"{st.getPath()}:{st.getLen()}:{st.getModificationTime()}")
-    return entries
-
-
-def _input_fingerprint(path: str, spark: SparkSession | None = None) -> str:
-    """Cheap snapshot of an input path — sorted (path, size, mtime) of
-    every data file, md5-folded. Folding this into the session-memo key
-    means a consumer that REWRITES the dataset at the same path
-    mid-session gets a fresh memo entry instead of stale capped bands
-    (the memo's immutable-parquet premise, now enforced rather than
-    assumed). Only a ``://`` URI is treated as non-local (a bare local
-    path with ``:`` inside a segment still stats locally); ``file://``
-    strips to the local branch; other schemes (s3a/hdfs/...) never hit
-    os.stat — with a ``spark`` handle they fold (path, length,
-    modificationTime) from the Hadoop FileSystem listing, preserving
-    the same rewrite-detection signal as the local branch even when a
-    rewriter keeps part-file names (distcp -overwrite) — else fall back
-    to ``"nostat"`` (path-only key)."""
-    import hashlib
-
-    h = hashlib.md5()
-    if "://" in path:
-        scheme, _, rest = path.partition("://")
-        if scheme == "file":
-            from urllib.parse import urlsplit
-
-            path = urlsplit(f"{scheme}://{rest}").path
-        else:
-            if spark is None:
-                return "nostat"
-            try:
-                entries = _hadoop_listing(spark, path)
-            except Exception:  # no FS impl / unreadable: degrade, don't fail the memo
-                return "nostat"
-            for e in sorted(entries):
-                h.update(e.encode() + b";")
-            return h.hexdigest()
-    try:
-        if os.path.isdir(path):
-            for root, dirs, files in os.walk(path):
-                dirs.sort()
-                for f in sorted(files):
-                    fp = os.path.join(root, f)
-                    st = os.stat(fp)
-                    h.update(
-                        f"{os.path.relpath(fp, path)}:{st.st_size}:"
-                        f"{st.st_mtime_ns};".encode()
-                    )
-        elif os.path.isfile(path):
-            st = os.stat(path)
-            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-        else:
-            return "nostat"
-    except OSError:
-        return "nostat"
-    return h.hexdigest()
 
 
 def capped_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:

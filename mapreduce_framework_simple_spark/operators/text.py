@@ -669,48 +669,21 @@ def scrub_pii(df: DataFrame, col: str = "text",
 LM_ROW_OVERHEAD_B = 48
 LM_BROADCAST_BYTES_BOUND = 48 * 1024 * 1024
 
-# (applicationId, sf_dir, input fingerprint, plan hash) → (rows, avg
-# bigram width). Same memo discipline as relational._DIM_PROBE_MEMO: a
-# session pays the stats job once per input, an in-session overwrite of
-# the parquet mints a new key, and staleness can only ever affect join
-# STRATEGY, never results. Scalars only; FIFO-bounded.
-_LM_STATS_MEMO: dict[tuple, tuple[int, float]] = {}
-_LM_STATS_MEMO_MAX = 32
 
-
-def _lm_table_stats(c_bg: DataFrame, sf_dir: str) -> tuple[int, float]:
-    """Memoized (row count, avg bigram width) of the c_bg frame. On a
-    memo MISS the frame is scoped-cached first, so the ONE aggregation
-    job doubles as the cache-populating action and the main query's
-    consumers reuse its rows — the broadcast dispatch adds no corpus
-    pass beyond the aggregation the query needs anyway. On memo HITS
-    nothing runs and nothing is cached. The round-12
-    ``_dim_probe_count`` limit-probe was wrong for this frame: its
-    bounded-cost rationale (LocalLimit caps each scan partition) holds
-    only for scan-backed dims — over an AGG-derived frame the probe
-    executed the full corpus-wide bigram groupBy and discarded the
-    rows, pricing the 'cheap' probe at a second corpus aggregation per
-    memo miss."""
-    from mapreduce_framework_simple_spark.ephemeral import bounded_memo_get
-    from mapreduce_framework_simple_spark.operators.relational import (
-        _fingerprint_guarded,
-    )
-
-    def compute() -> tuple[int, float]:
-        cached = scoped_cache(c_bg)
-        row = cached.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.avg(F.length("bg")), F.lit(0.0)).alias("w"),
-        ).collect()[0]
-        return int(row["n"]), float(row["w"])
-
-    key = (
-        c_bg.sparkSession.sparkContext.applicationId,
-        sf_dir,
-        _fingerprint_guarded(sf_dir, c_bg.sparkSession),
-        c_bg._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    return bounded_memo_get(_LM_STATS_MEMO, key, compute, _LM_STATS_MEMO_MAX)
+def _lm_table_stats(c_bg: DataFrame) -> tuple[int, float]:
+    """(row count, avg bigram width in UTF-8 bytes) of the c_bg frame,
+    computed over a scoped cache of it: the ONE aggregation job doubles
+    as the cache-populating action, so the main query's consumers reuse
+    its rows and the broadcast dispatch adds no corpus pass beyond the
+    aggregation the query needs anyway. A limit-probe would not do here:
+    LocalLimit cannot cap an agg-derived frame, so it would run the full
+    corpus-wide bigram groupBy a second time."""
+    cached = scoped_cache(c_bg)
+    row = cached.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.avg(F.octet_length("bg")), F.lit(0.0)).alias("w"),
+    ).collect()[0]
+    return int(row["n"]), float(row["w"])
 
 
 @query(
@@ -769,26 +742,19 @@ def q105_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(bigrams_expr(F.col("toks"))).alias("bg")
         )
     )
-    # c_bg cached ON THE DISPATCH-STATS MISS PATH only (round 13): the
-    # r12 limit-probe could not be capped by LocalLimit over this
-    # agg-derived frame — it executed the FULL corpus-wide bigram
-    # aggregation and threw the rows away once per memo miss (the
-    # ADVICE r12 finding). _lm_table_stats therefore caches c_bg before
-    # its stats job, so the miss-path corpus aggregation doubles as the
-    # query's own c_bg materialization (c_w1 and the scoring build side
-    # read vocabulary-bounded cached rows). On memo HITS nothing is
-    # cached: the plain agg's exchange is computed once and reused
-    # (ReusedExchange) — an unconditional cache was MEASURED WORSE at
-    # steady state (interleaved A/B at sf0.1: 0.878 s plain vs 1.090 s
-    # cached min — the materialization barrier costs more than the
-    # probe it saves, which the memo already skips).
+    # c_bg is cached on the dispatch-stats MISS path only
+    # (_lm_table_stats), where the stats job doubles as its
+    # materialization. On memo HITS nothing is cached: the plain agg's
+    # exchange is computed once and reused (ReusedExchange); an
+    # unconditional cache measured slower at steady state (sf0.1 A/B:
+    # 0.878 s plain vs 1.090 s cached min).
     c_bg = bg.groupBy("bg").agg(F.count("*").alias("c_bg"))
     c_w1 = c_bg.groupBy(
         F.substring_index("bg", " ", 1).alias("w1")
     ).agg(F.sum("c_bg").alias("c_w1"))
-    # LM-table hint policy (revised r12, re-revised r13): unhinted, the
-    # static planner committed to BuildLeft with the CORPUS-side bigram
-    # frame as the broadcast/build side (plans/r12/q105_bigram_lm_before
+    # LM-table hint policy: unhinted, the static planner committed to
+    # BuildLeft with the CORPUS-side bigram frame as the broadcast/build
+    # side (plans/r12/q105_bigram_lm_before
     # .txt — its cache statistic sits under the 64 MB threshold) before
     # AQE ever saw the 931-row LM table, so every probe walked a
     # corpus-sized hash relation. The hint is SIZE-DISPATCHED: memoized
@@ -803,16 +769,25 @@ def q105_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in both rows and bytes by construction, so one gate bounds both;
     # an over-bound vocabulary leaves the joins unhinted — the safe
     # direction, as before.
+    from mapreduce_framework_simple_spark import ephemeral
     from mapreduce_framework_simple_spark.operators.relational import (
         DIM_BROADCAST_ROW_BOUND,
     )
 
-    n_bg, avg_w = _lm_table_stats(c_bg, sf_dir)
+    n_bg, avg_w = ephemeral.bounded_memo_get(
+        ephemeral.STATS_MEMO,
+        ephemeral.stat_key("lm_table", c_bg, sf_dir),
+        lambda: _lm_table_stats(c_bg),
+    )
     if (
         n_bg <= DIM_BROADCAST_ROW_BOUND
         and n_bg * (avg_w + LM_ROW_OVERHEAD_B) <= LM_BROADCAST_BYTES_BOUND
     ):
         c_bg, c_w1 = F.broadcast(c_bg), F.broadcast(c_w1)
+    else:
+        # an over-bound vocabulary must not stay pinned in executor
+        # storage for the query scope (a no-op on a memo hit: not cached)
+        c_bg.unpersist(blocking=False)
     scored = (
         bg.join(c_bg, "bg")
         .join(

@@ -224,12 +224,10 @@ def _stage_stream_source(spark: SparkSession, table: str, sf_dir: str,
     import tempfile
     import time
 
-    from mapreduce_framework_simple_spark.operators.dedup import (
-        _input_fingerprint,
-    )
+    from mapreduce_framework_simple_spark.ephemeral import _input_fingerprint
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    # THE shared stat-walk content fingerprint (dedup._input_fingerprint):
+    # THE shared stat-walk content fingerprint (ephemeral._input_fingerprint):
     # recursive (relpath, size, mtime_ns) md5-fold — a rewrite inside a
     # partition subdir leaves the top-level entry unchanged, so a
     # one-level listing would key the stale corpus as current. One

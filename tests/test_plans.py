@@ -5,6 +5,8 @@ hot paths stay inside whole-stage codegen, top-k avoids global sorts.
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_framework_simple_spark.operators.relational import (
     q01_pricing_summary,
     q02_filter_project,
@@ -73,14 +75,25 @@ def test_q07_hint_dispatch_over_bound_equal(spark, sf_dir, monkeypatch):
     assert hinted.reset_index(drop=True).equals(unhinted.reset_index(drop=True))
 
 
+def _dim_rows(df, sf_dir, bound):
+    """q07's memoized dispatch statistic, computed exactly as its call
+    site does: the row count of ``df.limit(bound + 1)`` in STATS_MEMO."""
+    from mapreduce_framework_simple_spark.ephemeral import (
+        STATS_MEMO,
+        bounded_memo_get,
+        stat_key,
+    )
+
+    probe = df.limit(bound + 1)
+    return bounded_memo_get(STATS_MEMO, stat_key("dim_rows", probe, sf_dir), probe.count)
+
+
 def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
-    """_dim_probe_count keys on the input fingerprint (shared with the
-    dedup memos): an in-session overwrite of the parquet under sf_dir
-    must re-probe — a stale under-bound count would force a broadcast
+    """q07's dimension-count statistic keys on the input fingerprint
+    (ephemeral.stat_key): an in-session overwrite of the parquet under
+    sf_dir must re-probe — a stale under-bound count would force a broadcast
     hint onto a dim that has since grown past the bound."""
     import pandas as pd
-
-    from mapreduce_framework_simple_spark.operators import relational as R
 
     sf = tmp_path / "dimsf"
     sf.mkdir()
@@ -90,9 +103,9 @@ def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
         pd.DataFrame({"p_partkey": list(range(n))}).to_parquet(path)
 
     write(3)
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 3
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 3
     write(7)  # same path, grown dim, identical plan semantic hash
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 7
 
 
 def test_dim_probe_fingerprint_guard_skips_deep_walk_on_hit(
@@ -104,8 +117,7 @@ def test_dim_probe_fingerprint_guard_skips_deep_walk_on_hit(
     walk of the whole input; a rewrite still re-fingerprints."""
     import pandas as pd
 
-    from mapreduce_framework_simple_spark.operators import dedup
-    from mapreduce_framework_simple_spark.operators import relational as R
+    from mapreduce_framework_simple_spark import ephemeral
 
     sf = tmp_path / "guardsf"
     sf.mkdir()
@@ -116,22 +128,22 @@ def test_dim_probe_fingerprint_guard_skips_deep_walk_on_hit(
 
     write(3)
     deep_calls = []
-    orig = dedup._input_fingerprint
+    orig = ephemeral._input_fingerprint
 
     def counting(p, s=None):
         deep_calls.append(p)
         return orig(p, s)
 
-    monkeypatch.setattr(dedup, "_input_fingerprint", counting)
+    monkeypatch.setattr(ephemeral, "_input_fingerprint", counting)
     df = spark.read.parquet(str(path))
-    assert R._dim_probe_count(df, str(sf), 10) == 3
+    assert _dim_rows(df, str(sf), 10) == 3
     n_first = len(deep_calls)
     assert n_first >= 1
     for _ in range(3):  # unchanged input: shallow guard, zero deep walks
-        assert R._dim_probe_count(df, str(sf), 10) == 3
+        assert _dim_rows(df, str(sf), 10) == 3
     assert len(deep_calls) == n_first
     write(7)  # rewrite: shallow signature changes → deep re-fingerprint
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 7
     assert len(deep_calls) > n_first
 
 
@@ -144,8 +156,7 @@ def test_dim_probe_fingerprint_guard_sees_partition_rewrite(
     bumps its immediate parent dir's mtime at any depth)."""
     import pandas as pd
 
-    from mapreduce_framework_simple_spark.operators import dedup
-    from mapreduce_framework_simple_spark.operators import relational as R
+    from mapreduce_framework_simple_spark import ephemeral
 
     sf = tmp_path / "partsf"
     part_dir = sf / "part.parquet" / "date=1"
@@ -160,18 +171,18 @@ def test_dim_probe_fingerprint_guard_sees_partition_rewrite(
 
     write(3, "f1.parquet")
     deep_calls = []
-    orig = dedup._input_fingerprint
+    orig = ephemeral._input_fingerprint
 
     def counting(p, s=None):
         deep_calls.append(p)
         return orig(p, s)
 
-    monkeypatch.setattr(dedup, "_input_fingerprint", counting)
+    monkeypatch.setattr(ephemeral, "_input_fingerprint", counting)
     tbl = str(sf / "part.parquet")
-    assert R._dim_probe_count(spark.read.parquet(tbl), str(sf), 10) == 3
+    assert _dim_rows(spark.read.parquet(tbl), str(sf), 10) == 3
     n_first = len(deep_calls)
     write(7, "f2.parquet")  # partition-scoped rewrite, table dir untouched
-    assert R._dim_probe_count(spark.read.parquet(tbl), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(tbl), str(sf), 10) == 7
     assert len(deep_calls) > n_first
 
 
@@ -512,6 +523,7 @@ def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     over-byte-bound branch and assert the hint is gone from the
     analyzed plan while the answer is row-identical — the dispatch may
     only ever change strategy, never results."""
+    from mapreduce_framework_simple_spark import ephemeral
     from mapreduce_framework_simple_spark.operators import text as T
     from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
 
@@ -522,10 +534,145 @@ def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     assert "ResolvedHint" in analyzed(under), "under-bound branch lost its hint"
     hinted = under.toPandas().sort_values("doc_id")
     monkeypatch.setattr(T, "LM_BROADCAST_BYTES_BOUND", 0)
+    # a cold stats memo takes the MISS path, which caches c_bg before it
+    # measures it: over the bound that cache must be released at once
+    ephemeral.STATS_MEMO.clear()
+    n0 = len(ephemeral._SCOPED)
     over = q105_bigram_lm(spark, sf_dir)
     assert "ResolvedHint" not in analyzed(over), "over-byte-bound kept the hint"
+    c_bg = [h for h in ephemeral._SCOPED[n0:] if "c_bg" in h.columns]
+    assert len(c_bg) == 1, "miss path did not scoped-cache c_bg"
+    lvl = c_bg[0].storageLevel
+    assert not (lvl.useMemory or lvl.useDisk), "over-bound c_bg still cached"
     unhinted = over.toPandas().sort_values("doc_id")
     assert hinted.reset_index(drop=True).equals(unhinted.reset_index(drop=True))
+
+
+def test_q105_byte_gate_counts_utf8_bytes(spark, tmp_path, monkeypatch):
+    """q105's byte gate measures UTF-8 bytes, not characters: on a CJK
+    corpus (3 bytes per character) a bound placed between the character
+    estimate and the byte estimate must leave the LM joins unhinted —
+    a character-width estimate would call the table small enough — and
+    the answer must not change."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from mapreduce_framework_simple_spark.operators import text as T
+    from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
+    from mapreduce_framework_simple_spark.sources.io import load_table
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    words = ["東京", "大阪", "京都", "札幌", "福岡", "神戸", "横浜", "名古屋"]
+    rows = [
+        {"doc_id": i, "text": " ".join(words[(i * j) % 8] for j in range(1, 7)),
+         "lang": "ja", "source": "web", "n_chars": 20}
+        for i in range(12)
+    ]
+    sf = tmp_path / "cjk"
+    sf.mkdir()
+    pd.DataFrame(rows).to_parquet(sf / "documents.parquet")
+    sf_dir = str(sf)
+
+    bg = load_table(spark, "documents", sf_dir).select(
+        F.explode(T.bigrams_expr(T.tokens_expr())).alias("bg")
+    )
+    st = bg.groupBy("bg").count().agg(
+        F.count("*").alias("n"),
+        F.avg(F.length("bg")).alias("chars"),
+        F.avg(F.octet_length("bg")).alias("bytes"),
+    ).collect()[0]
+    char_est = st["n"] * (st["chars"] + T.LM_ROW_OVERHEAD_B)
+    byte_est = st["n"] * (st["bytes"] + T.LM_ROW_OVERHEAD_B)
+    assert byte_est - char_est > 2  # the corpus really is multi-byte
+
+    under = q105_bigram_lm(spark, sf_dir)
+    assert "ResolvedHint" in analyzed(under), "small LM table lost its hint"
+    hinted = under.toPandas().sort_values("doc_id")
+    monkeypatch.setattr(T, "LM_BROADCAST_BYTES_BOUND", (char_est + byte_est) / 2)
+    over = q105_bigram_lm(spark, sf_dir)
+    assert "ResolvedHint" not in analyzed(over), (
+        "byte gate measured characters: a multi-byte table passed as small"
+    )
+    unhinted = over.toPandas().sort_values("doc_id")
+    assert len(hinted) == len(rows)
+    assert hinted.reset_index(drop=True).equals(unhinted.reset_index(drop=True))
+
+
+def _one_stat(name):
+    """The single STATS_MEMO value recorded under statistic ``name``."""
+    from mapreduce_framework_simple_spark.ephemeral import STATS_MEMO
+
+    (val,) = {v for k, v in STATS_MEMO.items() if k[0] == name}
+    return val
+
+
+@pytest.mark.parametrize("gate", ["q07_dim_rows", "q105_lm_bytes", "q36_fanout",
+                                  "q36_prefix_packed_bytes"])
+def test_dispatch_gate_boundaries(spark, sf_dir, monkeypatch, gate):
+    """Each size gate set AT its measured statistic and one step below
+    it: the branch flips exactly there (pinning <= against < and >
+    against >=) and the rows are identical on both sides. q07/q105 and
+    the packed-array gate keep the broadcast hint while the statistic is
+    within the bound; q36 switches to the prefix kernel only while the
+    fan-out is strictly above its threshold."""
+    import math
+
+    from mapreduce_framework_simple_spark import ephemeral
+    from mapreduce_framework_simple_spark.operators import dedup as D
+    from mapreduce_framework_simple_spark.operators import relational as R
+    from mapreduce_framework_simple_spark.operators import text as T
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    def below(x):
+        return x - 1 if isinstance(x, int) else math.nextafter(x, -math.inf)
+
+    prefix_calls = []
+    real_prefix = D._jaccard_prefix_pairs
+
+    def spy(sh, sf):
+        prefix_calls.append(1)
+        return real_prefix(sh, sf)
+
+    monkeypatch.setattr(D, "_jaccard_prefix_pairs", spy)
+    ephemeral.STATS_MEMO.clear()
+    if gate == "q07_dim_rows":
+        mod, bound, run, key = R, "DIM_BROADCAST_ROW_BOUND", q07_broadcast_brand, ["brand"]
+        run(spark, sf_dir)
+        stat = _one_stat("dim_rows")
+    elif gate == "q105_lm_bytes":
+        mod, bound, run, key = T, "LM_BROADCAST_BYTES_BOUND", T.q105_bigram_lm, ["doc_id"]
+        run(spark, sf_dir)
+        n_bg, avg_w = _one_stat("lm_table")
+        stat = n_bg * (avg_w + T.LM_ROW_OVERHEAD_B)
+    elif gate == "q36_fanout":
+        mod, bound, run = D, "JACCARD_FANOUT_DISPATCH", D.q36_ngram_jaccard
+        key = ["doc_a", "doc_b"]
+        run(spark, sf_dir)
+        stat = _one_stat("fanout")
+    else:
+        mod, bound, run = D, "PACKED_BROADCAST_BYTES_BOUND", D.ngram_jaccard_prefix
+        key = ["doc_a", "doc_b"]
+        run(spark, sf_dir)
+        stat = _one_stat("packed_bytes")
+
+    results = []
+    for setting in (stat, below(stat)):
+        monkeypatch.setattr(mod, bound, setting)
+        prefix_calls.clear()
+        df = run(spark, sf_dir)
+        if gate == "q36_fanout":
+            taken = bool(prefix_calls)  # the prefix kernel runs strictly above
+            want = setting != stat
+        else:
+            taken = "ResolvedHint" in analyzed(df)  # hinted within the bound
+            want = setting == stat
+        assert taken == want, f"{gate}: wrong branch at bound {setting!r} (stat {stat!r})"
+        results.append(df.toPandas().sort_values(key).reset_index(drop=True))
+    assert results[0].equals(results[1]), f"{gate}: rows differ across the bound"
 
 
 def test_q105_stats_memo_no_repeat_probe_and_miss_path_cache(spark, sf_dir):
@@ -536,20 +683,22 @@ def test_q105_stats_memo_no_repeat_probe_and_miss_path_cache(spark, sf_dir):
     steady-state plan stays the round-12 ReusedExchange shape, which an
     unconditional cache was measured to regress (A/B 0.878 → 1.090 s)."""
     from mapreduce_framework_simple_spark import ephemeral
-    from mapreduce_framework_simple_spark.operators import text as T
     from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
+
+    def n_lm_stats():
+        return sum(k[0] == "lm_table" for k in ephemeral.STATS_MEMO)
 
     ephemeral.release_caches()
     spark.catalog.clearCache()
-    T._LM_STATS_MEMO.clear()
+    ephemeral.STATS_MEMO.clear()
     try:
         n_handles0 = len(ephemeral._SCOPED)
         q105_bigram_lm(spark, sf_dir).count()
-        assert len(T._LM_STATS_MEMO) == 1, "miss path must memoize the stats"
+        assert n_lm_stats() == 1, "miss path must memoize the stats"
         n_handles1 = len(ephemeral._SCOPED)
         assert n_handles1 > n_handles0, "miss path must scoped-cache c_bg"
         q105_bigram_lm(spark, sf_dir).count()
-        assert len(T._LM_STATS_MEMO) == 1, "hit path must not re-probe"
+        assert n_lm_stats() == 1, "hit path must not re-probe"
         # hit path registers only q105's own bg cache, no c_bg handle:
         # exactly as many new handles as the first call MINUS the
         # stats-path c_bg cache

@@ -878,20 +878,20 @@ def test_fingerprint_remote_scheme_never_stats(spark, sf_dir):
     stat-based signal."""
     import os as _os
 
-    from mapreduce_framework_simple_spark.operators import dedup as D
+    from mapreduce_framework_simple_spark import ephemeral as E
 
-    assert D._input_fingerprint("s3a://bucket/corpus.parquet") == "nostat"
+    assert E._input_fingerprint("s3a://bucket/corpus.parquet") == "nostat"
     # scheme no Hadoop build can resolve — deterministic even on images
     # that bundle hadoop-aws (a real s3a call would retry for minutes)
-    assert D._input_fingerprint("xtest://bucket/corpus.parquet", spark) == "nostat"
-    assert D._input_fingerprint("hdfs://nn:8020/corpus.parquet") == "nostat"
-    assert D._input_fingerprint("/nonexistent/local/path") == "nostat"
+    assert E._input_fingerprint("xtest://bucket/corpus.parquet", spark) == "nostat"
+    assert E._input_fingerprint("hdfs://nn:8020/corpus.parquet") == "nostat"
+    assert E._input_fingerprint("/nonexistent/local/path") == "nostat"
     # bare local path with ':' inside a segment is NOT mistaken for a URI
-    assert D._input_fingerprint("data:v2/nonexistent") == "nostat"
+    assert E._input_fingerprint("data:v2/nonexistent") == "nostat"
     # file:// URIs strip to the local branch: same digest as the bare path
     docs = _os.path.join(sf_dir, "documents.parquet")
-    assert D._input_fingerprint(f"file://{docs}") == D._input_fingerprint(docs)
-    assert D._input_fingerprint(docs) != "nostat"
+    assert E._input_fingerprint(f"file://{docs}") == E._input_fingerprint(docs)
+    assert E._input_fingerprint(docs) != "nostat"
 
 
 def test_fingerprint_hadoop_listing_happy_path(spark, tmp_path):
@@ -901,15 +901,15 @@ def test_fingerprint_hadoop_listing_happy_path(spark, tmp_path):
     same signal the local branch gets from os.stat."""
     import pandas as pd
 
-    from mapreduce_framework_simple_spark.operators import dedup as D
+    from mapreduce_framework_simple_spark import ephemeral as E
 
     d = tmp_path / "ds.parquet"
     pd.DataFrame({"x": [1, 2, 3]}).to_parquet(d)
-    first = D._hadoop_listing(spark, f"file://{d}")
+    first = E._hadoop_listing(spark, f"file://{d}")
     assert first and all(len(e.rsplit(":", 2)) == 3 for e in first)
     assert sum(int(e.rsplit(":", 2)[1]) for e in first) > 0
     pd.DataFrame({"x": list(range(50))}).to_parquet(d)  # rewrite, same path
-    assert sorted(D._hadoop_listing(spark, f"file://{d}")) != sorted(first)
+    assert sorted(E._hadoop_listing(spark, f"file://{d}")) != sorted(first)
 
 
 def test_memo_lru_cap_and_stale_app_eviction(spark):
@@ -1050,9 +1050,9 @@ def test_q36_dispatches_kernels_by_fanout(spark, sf_dir, tmp_path, monkeypatch):
     calls = []
     real_prefix = D._jaccard_prefix_pairs
 
-    def spy(sh):
+    def spy(sh, sf_dir):
         calls.append("prefix")
-        return real_prefix(sh)
+        return real_prefix(sh, sf_dir)
 
     monkeypatch.setattr(D, "_jaccard_prefix_pairs", spy)
 
@@ -1143,31 +1143,27 @@ def test_fanout_probe_sees_single_hot_shingle(spark, tmp_path):
 
 
 def test_q36_fanout_memoized_per_session_and_input(spark, sf_dir, monkeypatch):
-    """The dispatch statistic is memoized per (session, sf_dir, input
-    fingerprint): q36 consults the scalar memo before re-measuring, so
-    repeat runs over immutable parquet skip the probe. Seeding the memo
-    with an absurd fan-out must flip the kernel choice — proof the
+    """The dispatch statistic is memoized per (session, input
+    fingerprint, plan): q36 consults the scalar memo before re-measuring,
+    so repeat runs over immutable parquet skip the probe. Seeding the
+    memo with an absurd fan-out must flip the kernel choice — proof the
     memoized value, not a re-measurement, drives the dispatch."""
-    import os as _os
-
+    from mapreduce_framework_simple_spark.ephemeral import STATS_MEMO, stat_key
     from mapreduce_framework_simple_spark.operators import dedup as D
 
     calls = []
     real_prefix = D._jaccard_prefix_pairs
 
-    def spy(sh):
+    def spy(sh, sf_dir):
         calls.append("prefix")
-        return real_prefix(sh)
+        return real_prefix(sh, sf_dir)
 
     monkeypatch.setattr(D, "_jaccard_prefix_pairs", spy)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        D._input_fingerprint(_os.path.join(sf_dir, "documents.parquet")),
-    )
+    sh = D._with_doc_n(D.shingle_id_sets(spark, sf_dir))  # q36's cached plan
+    key = stat_key("fanout", sh, sf_dir)
     D.q36_ngram_jaccard(spark, sf_dir).count()
-    assert calls == [] and key in D._FANOUT_MEMO  # measured + stored
-    monkeypatch.setitem(D._FANOUT_MEMO, key, 1e9)
+    assert calls == [] and key in STATS_MEMO  # measured + stored
+    monkeypatch.setitem(STATS_MEMO, key, 1e9)
     D.q36_ngram_jaccard(spark, sf_dir).count()
     assert calls == ["prefix"]  # memo hit drove the dispatch
 
@@ -1806,7 +1802,7 @@ def test_hyperplane_dim_mismatch_fails_loudly(spark):
         S.hyperplane_lsh_pairs(df, threshold=0.0).collect()
 
 
-def test_truth_kernel_ratio_prefilter_keeps_boundary_pair(spark):
+def test_truth_kernel_ratio_prefilter_keeps_boundary_pair(spark, tmp_path):
     """The round-13 length-ratio prefilter (min(n)/max(n) >= t before the
     pair exchange) must keep a pair sitting exactly ON the bound: A ⊂ B
     with |A| = 4, |B| = 8 has min/max = 0.5 AND J = 4/(4+8-4) = 0.5 — a
@@ -1856,7 +1852,7 @@ def test_truth_kernel_ratio_prefilter_keeps_boundary_pair(spark):
     # bound exactly tight (1 + min(3, 7) = 4 = α = (4+8)/3 rounded up)
     got_prefix = {
         (r.doc_a, r.doc_b, round(r.jaccard_raw, 6))
-        for r in D._jaccard_prefix_pairs(sh).collect()
+        for r in D._jaccard_prefix_pairs(sh, str(tmp_path)).collect()
     }
     assert got_prefix == want, (
         f"prefix kernel diverged after candidate pruning: {got_prefix ^ want}"

@@ -11,9 +11,10 @@ needed re-deriving under the honest discipline. That discipline here:
 * BOTH kernels, at EVERY regime, run from the same state — an untimed
   warm-up pass first (whole-stage codegen + parquet footers + Python
   workers for exactly the measured plan shapes, and it equalizes the OS
-  page cache), then timed runs with scoped caches AND the Spark cache
-  manager cleared before each, so every timed run re-executes the full
-  pipeline including the shingle build. min of `--runs` (default 2).
+  page cache), then timed runs with scoped caches, the scalar statistics
+  memo AND the Spark cache manager cleared before each, so every timed
+  run re-executes the full pipeline including the shingle build and the
+  prefix kernel's packed-bytes probe. min of `--runs` (default 2).
 * the regimes are documents-only offset replicas (tools/replica.py —
   every doc gains n-1 exact copies, the dup-heavy shape that drives
   fan-out up), so naive and prefix read the SAME bytes per regime.
@@ -72,12 +73,13 @@ def main() -> None:
         return ensure_replica(f"/tmp/mfss_jacc_x{n}", build)
 
     kernels = {
-        "naive": D._jaccard_truth_pairs,
+        "naive": lambda sh, d: D._jaccard_truth_pairs(sh),
         "prefix": D._jaccard_prefix_pairs,
     }
 
     def cold() -> None:
         ephemeral.release_caches()
+        ephemeral.STATS_MEMO.clear()  # the prefix kernel re-pays its packed-bytes probe
         spark.catalog.clearCache()
 
     results = []
@@ -86,7 +88,7 @@ def main() -> None:
 
         def pipeline(kernel):
             sh = ephemeral.scoped_cache(D.shingle_id_sets(spark, d))
-            return kernel(sh)
+            return kernel(sh, d)
 
         # untimed warm-up of BOTH plan shapes at this regime
         for k in kernels.values():
